@@ -553,38 +553,24 @@ class DedupSpec extends SparkSpec {
       s"cut() returned without materializing (${acc.value} rows touched)")
   }
 
-  test("jaccardPrefixPairs pinned streams sit behind Checkpoints.cut in " +
-    "measured mode (the default) — RDD-backed leaves, covered by the " +
-    "reliable-checkpoint switch — and pairVolMinBytes=-1 runs cut-free") {
+  test("jaccardPrefixPairs pinned streams sit behind Checkpoints.cut — " +
+    "RDD-backed leaves, covered by the reliable-checkpoint switch") {
     import spark.implicits._
     val df = Seq((1L, "aa bb cc dd ee"), (2L, "aa bb cc dd ee"),
       (3L, "ff gg hh ii jj")).toDF("doc_id", "text")
     def rddLeaves(out: org.apache.spark.sql.DataFrame): Int =
       out.queryExecution.analyzed.collectLeaves()
         .count(_.getClass.getSimpleName == "LogicalRDD")
-    // measured mode (the default: pairVolMinBytes 0): the shingle stream
-    // `s` (read twice by the verify joins) and the prefix-bucket stream
-    // each ride a cut — the post-cut plan's leaves are LogicalRDDs, so
-    // spark.graft.checkpoint.dir makes BOTH reliable on a real cluster
-    // (r15 verdict #4: a bare localCheckpoint bypassed that switch)
+    // the shingle stream `s` (read twice by the verify joins) and the
+    // prefix-bucket stream each ride a cut — the post-cut plan's leaves
+    // are LogicalRDDs, so spark.graft.checkpoint.dir makes BOTH reliable
+    // on a real cluster (r15 verdict #4: a bare localCheckpoint bypassed
+    // that switch)
     val out = Dedup.jaccardPrefixPairs(df, col("doc_id"), col("text"))
     assert(rddLeaves(out) >= 3,
       s"expected >= 3 LogicalRDD leaves (s twice + prefix), got " +
         s"${rddLeaves(out)} in:\n${out.queryExecution.analyzed}")
-    val measuredOut = out.collect()
-      .map(r => (r.getLong(0), r.getLong(1))).toSet
-    // measuring disabled (-1, budget unpinned): NO cuts and NO eager
-    // measurement jobs — the r20 escape hatch mirroring the minhash
-    // family's gate (r19 verdict #1) — same rows out
-    val conf = spark.conf
-    conf.set("spark.graft.pairVolMinBytes", "-1")
-    val got = try {
-      val lazyOut = Dedup.jaccardPrefixPairs(df, col("doc_id"), col("text"))
-      assert(rddLeaves(lazyOut) == 0,
-        s"measuring disabled must not cut:\n${lazyOut.queryExecution.analyzed}")
-      lazyOut.collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-    } finally conf.unset("spark.graft.pairVolMinBytes")
-    assert(got == Set((1L, 2L)))
-    assert(measuredOut == got)
+    assert(out.collect().map(r => (r.getLong(0), r.getLong(1))).toSet ==
+      Set((1L, 2L)))
   }
 }
