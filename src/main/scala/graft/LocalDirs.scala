@@ -1,6 +1,9 @@
 package graft
 
 import java.io.File
+import java.nio.file.Files
+
+import scala.jdk.OptionConverters._
 
 /** Shuffle/spill local-dir selection for the driver mains (guide §6 —
   * file layout; §2.1 — local disk bandwidth for shuffle files can be the
@@ -29,7 +32,8 @@ import java.io.File
   * Each JVM gets its own `pid-<pid>` subdirectory so a killed JVM's
   * leftovers (Spark's shutdown hook never ran) are identifiable: on
   * startup, sibling dirs whose pid is dead are purged — tmpfs leaks are
-  * RAM leaks.
+  * RAM leaks. Each dir also records its JVM's start instant, so a dir
+  * whose pid the OS has since handed to another process is purged too.
   */
 object LocalDirs {
 
@@ -38,6 +42,24 @@ object LocalDirs {
     fs.foreach(deleteRecursively)
     f.delete(): Unit
   }
+
+  private def startedAt(p: ProcessHandle): Option[String] =
+    p.info().startInstant().toScala.map(_.toString)
+
+  /** Delete every stale `pid-<n>` dir under `root`: pid `n` is dead, or
+    * the dir's `started` marker differs from live pid `n`'s start instant
+    * (the pid was reused). Dirs without a marker go by pid liveness. */
+  private[graft] def purgeStale(root: File): Unit =
+    for (d <- Option(root.listFiles()).getOrElse(Array.empty[File])) {
+      val pid = d.getName.stripPrefix("pid-")
+      val marker = new File(d, "started")
+      if (d.getName.startsWith("pid-") && pid.nonEmpty &&
+          pid.forall(_.isDigit) &&
+          pid.toLongOption.flatMap(ProcessHandle.of(_).toScala).forall(p =>
+            marker.isFile && startedAt(p).exists(
+              _ != Files.readString(marker.toPath).trim)))
+        deleteRecursively(d)
+    }
 
   /** The local-dir override for a SparkSession builder, or None to keep
     * Spark's default resolution. */
@@ -51,14 +73,12 @@ object LocalDirs {
       else {
         val root = new File(shm, "graft-spark-local")
         root.mkdirs()
-        for (d <- Option(root.listFiles()).getOrElse(Array.empty[File])) {
-          val pid = d.getName.stripPrefix("pid-")
-          if (d.getName.startsWith("pid-") && pid.nonEmpty &&
-              pid.forall(_.isDigit) && !new File(s"/proc/$pid").exists())
-            deleteRecursively(d)
-        }
-        val mine = new File(root, s"pid-${ProcessHandle.current().pid()}")
+        purgeStale(root)
+        val me = ProcessHandle.current()
+        val mine = new File(root, s"pid-${me.pid()}")
         mine.mkdirs()
+        startedAt(me).foreach(s =>
+          Files.writeString(new File(mine, "started").toPath, s))
         Some(mine.getAbsolutePath)
       }
   }

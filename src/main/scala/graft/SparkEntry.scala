@@ -48,6 +48,32 @@ object SparkEntry {
     (e.union(copies), queries)
   }
 
+  /** The documents plus an exact copy of each under doc_id + 1e8 — the
+    * planted-duplicate corpus of the near-dup family (the offset sits
+    * above every real doc id at any sf, so copies never collide). */
+  private def dupCorpus(s: SparkSession, dir: String): DataFrame = {
+    val d = Tables.documents(s, dir).select(col("doc_id"), col("text"))
+    d.union(d.select(col("doc_id") + 100000000L, col("text")))
+  }
+
+  /** [[dupCorpus]]'s minhash near-dup pairs as an edge list — the
+    * similarity graph the Graph queries cluster, rank and count. */
+  private def dupPairs(s: SparkSession, dir: String): DataFrame =
+    Dedup.minhashDupPairs(dupCorpus(s, dir), col("doc_id"), col("text"),
+      ordered = false) // intermediate — order irrelevant downstream
+
+  /** [[dupPairs]] as the directed (src, dst) edge SET both PageRank
+    * queries rank. Cut before symmetrizing: the pair list feeds BOTH
+    * union branches, and an uncut lineage would run the whole minhash
+    * pipeline twice inside one job. Pairs are distinct with id_a < id_b,
+    * so the reversal union is disjoint — the edge list is already a set
+    * (`edgesDistinct`). */
+  private def dupPairEdges(s: SparkSession, dir: String): DataFrame = {
+    val pairs = Checkpoints.cut(dupPairs(s, dir))
+    pairs.select(col("id_a").as("src"), col("id_b").as("dst"))
+      .union(pairs.select(col("id_b"), col("id_a")))
+  }
+
   def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
 
     // ---- A1/A2/A3/P1/P6: word count (a1p2a:20) --------------------------
@@ -429,7 +455,7 @@ object SparkEntry {
       // md5 over the vocabulary, not the corpus) and the top-k ranking
       val counts = TextAnalytics.wordCount(docs, col("text"))
         .select(col("word").as("term"), col("cnt"))
-        .localCheckpoint()
+        .transform(Checkpoints.cut)
       val sketch = Sketches.cmBuildWeighted(counts, col("term"), col("cnt"))
       val top = Relational.globalRowNumber(counts,
         Seq(col("cnt").desc, col("term")), alias = "rank")
@@ -1018,55 +1044,28 @@ object SparkEntry {
     // ---- PageRank in exact integer micro-units over the near-dup
     // similarity graph (same edge list dedup_components clusters):
     // importance ∝ how centrally a doc sits in its duplicate cluster -----
-    "doc_pagerank" -> ((s, dir) => {
-      val d = Tables.documents(s, dir).select(col("doc_id"), col("text"))
-      val dupped = d.union(d.select(col("doc_id") + 100000000L, col("text")))
-      // checkpoint before symmetrizing: the pair list feeds BOTH union
-      // branches, and an uncut lineage would run the whole minhash
-      // pipeline twice inside one job
-      val pairs = Dedup.minhashDupPairs(dupped, col("doc_id"), col("text"),
-          ordered = false) // edge list — pair order is irrelevant
-        .localCheckpoint()
-      val sym = pairs.select(col("id_a").as("src"), col("id_b").as("dst"))
-        .union(pairs.select(col("id_b"), col("id_a")))
-      // pairs are distinct with id_a < id_b, so the reversal union is
-      // disjoint — the edge list is already a set (edgesDistinct)
-      Graph.pageRank(sym, col("src"), col("dst"), iterations = 5,
-          edgesDistinct = true)
+    "doc_pagerank" -> ((s, dir) =>
+      Graph.pageRank(dupPairEdges(s, dir), col("src"), col("dst"),
+          iterations = 5, edgesDistinct = true)
         .select(col("node").as("doc_id"), col("r").as("rank_micro"))
-        .orderBy("doc_id")
-    }),
+        .orderBy("doc_id")),
 
     // ---- seed-set expansion: personalized PageRank over the same graph,
     // teleport restricted to doc_id < 50 — "docs similar to the curated
     // seeds rank high, disconnected regions stay exactly 0" ---------------
-    "doc_pagerank_seeded" -> ((s, dir) => {
-      val d = Tables.documents(s, dir).select(col("doc_id"), col("text"))
-      val dupped = d.union(d.select(col("doc_id") + 100000000L, col("text")))
-      val pairs = Dedup.minhashDupPairs(dupped, col("doc_id"), col("text"),
-          ordered = false) // edge list — pair order is irrelevant
-        .localCheckpoint()
-      val sym = pairs.select(col("id_a").as("src"), col("id_b").as("dst"))
-        .union(pairs.select(col("id_b"), col("id_a")))
-      // same disjoint-reversal set argument as doc_pagerank
-      Graph.personalizedPageRank(sym, col("src"), col("dst"),
-          seeds = d.select(col("doc_id")).filter(col("doc_id") < 50),
+    "doc_pagerank_seeded" -> ((s, dir) =>
+      Graph.personalizedPageRank(dupPairEdges(s, dir), col("src"), col("dst"),
+          seeds = Tables.documents(s, dir).select(col("doc_id"))
+            .filter(col("doc_id") < 50),
           seed = col("doc_id"), iterations = 5, edgesDistinct = true)
         .select(col("node").as("doc_id"), col("r").as("rank_micro"))
-        .orderBy("doc_id")
-    }),
+        .orderBy("doc_id")),
 
     // ---- exact per-node triangle counts over the same near-dup similarity
     // graph (degree-ordered orientation bounds wedges at O(m^{3/2}); a
     // natural near-dup pair plus its two copies forms a K4 → triangles) ---
-    "triangle_counts" -> ((s, dir) => {
-      val d = Tables.documents(s, dir).select(col("doc_id"), col("text"))
-      val dupped = d.union(d.select(col("doc_id") + 100000000L, col("text")))
-      Graph.triangleCounts(
-        Dedup.minhashDupPairs(dupped, col("doc_id"), col("text"),
-          ordered = false), // intermediate — order irrelevant downstream
-        col("id_a"), col("id_b"))
-    }),
+    "triangle_counts" -> ((s, dir) =>
+      Graph.triangleCounts(dupPairs(s, dir), col("id_a"), col("id_b"))),
 
     // ---- incremental near-dedup: the per-batch delta-vs-corpus shape —
     // existing = documents, incoming = shifted copies; only cross-side
@@ -1184,11 +1183,8 @@ object SparkEntry {
     // deterministic-recall twin of minhash_dup_pairs (same corpus, same
     // threshold, same brute-force oracle — but candidate pruning is a
     // lemma, not an S-curve) ---------------------------------------------
-    "jaccard_prefix_pairs" -> ((s, dir) => {
-      val d = Tables.documents(s, dir).select(col("doc_id"), col("text"))
-      val dupped = d.union(d.select(col("doc_id") + 100000000L, col("text")))
-      Dedup.jaccardPrefixPairs(dupped, col("doc_id"), col("text"))
-    }),
+    "jaccard_prefix_pairs" -> ((s, dir) =>
+      Dedup.jaccardPrefixPairs(dupCorpus(s, dir), col("doc_id"), col("text"))),
 
     // ---- Markov transition matrix of per-user event-type sequences
     // (bigram counts + exactly-rounded row-normalized probabilities) ------
@@ -1280,42 +1276,28 @@ object SparkEntry {
 
     // ---- MinHash+LSH near-dup (self-union guarantees true dup pairs;
     // hash-green vs the brute-force all-pairs oracle) ----------------------
-    "minhash_dup_pairs" -> ((s, dir) => {
-      val d = Tables.documents(s, dir).select(col("doc_id"), col("text"))
-      val dupped = d.union(d.select(col("doc_id") + 100000000L, col("text")))
-      Dedup.minhashDupPairs(dupped, col("doc_id"), col("text"))
-    }),
+    "minhash_dup_pairs" -> ((s, dir) =>
+      Dedup.minhashDupPairs(dupCorpus(s, dir), col("doc_id"), col("text"))),
 
     // ---- dedup clusters: similarity pairs → connected components → keep
     // list (min-id representative per cluster; Graph.scala scaladoc).
     // Explicitly the LABEL-PROPAGATION twin, so both algorithms stay under
     // the same recursive-CTE oracle (the production dedupClusters entry
-    // point now routes through star contraction — see dedup_components_star)
-    "dedup_components" -> ((s, dir) => {
-      val d = Tables.documents(s, dir).select(col("doc_id"), col("text"))
-      val dupped = d.union(d.select(col("doc_id") + 100000000L, col("text")))
-      Graph.connectedComponents(
-        Dedup.minhashDupPairs(dupped, col("doc_id"), col("text"),
-          ordered = false), // intermediate — order irrelevant downstream
-        col("id_a"), col("id_b"))
+    // point tries label propagation first and falls back to star
+    // contraction on long paths — see dedup_components_star)
+    "dedup_components" -> ((s, dir) =>
+      Graph.connectedComponents(dupPairs(s, dir), col("id_a"), col("id_b"))
         .select(col("id"), col("comp"), (col("id") === col("comp")).as("keep"))
-        .orderBy("id")
-    }),
+        .orderBy("id")),
 
     // ---- same clustering via large-star/small-star contraction — the
     // O(log² n)-rounds twin for adversarial diameters (label propagation
     // pays one round per hop of the longest chain); identical semantics,
     // so it shares dedup_components' recursive-CTE oracle ----------------
-    "dedup_components_star" -> ((s, dir) => {
-      val d = Tables.documents(s, dir).select(col("doc_id"), col("text"))
-      val dupped = d.union(d.select(col("doc_id") + 100000000L, col("text")))
-      Graph.connectedComponentsStar(
-        Dedup.minhashDupPairs(dupped, col("doc_id"), col("text"),
-          ordered = false), // intermediate — order irrelevant downstream
-        col("id_a"), col("id_b"))
+    "dedup_components_star" -> ((s, dir) =>
+      Graph.connectedComponentsStar(dupPairs(s, dir), col("id_a"), col("id_b"))
         .select(col("id"), col("comp"), (col("id") === col("comp")).as("keep"))
-        .orderBy("id")
-    }),
+        .orderBy("id")),
 
     // ---- entity resolution: nation-blocked fuzzy name matching —
     // blocking bounds candidates, levenshtein verifies each pair; blocks
@@ -1383,8 +1365,7 @@ object SparkEntry {
     // ---- leakage-safe splits: near-dup clusters land in ONE split (rep-
     // keyed hash); singletons behave like assignSplit on their own id ----
     "cluster_safe_splits" -> ((s, dir) => {
-      val d = Tables.documents(s, dir).select(col("doc_id"), col("text"))
-      val dupped = d.union(d.select(col("doc_id") + 100000000L, col("text")))
+      val dupped = dupCorpus(s, dir)
       Sampling.clusterSafeSplits(dupped, col("doc_id"),
         Dedup.minhashDupPairs(dupped, col("doc_id"), col("text"),
           ordered = false), // intermediate — order irrelevant downstream
@@ -1406,20 +1387,14 @@ object SparkEntry {
     }),
 
     // ---- SimHash near-dup ----------------------------------------------
-    "simhash_dup_pairs" -> ((s, dir) => {
-      val d = Tables.documents(s, dir).select(col("doc_id"), col("text"))
-      val dupped = d.union(d.select(col("doc_id") + 100000000L, col("text")))
-      Dedup.simhashDupPairs(dupped, col("doc_id"), col("text"))
-    }),
+    "simhash_dup_pairs" -> ((s, dir) =>
+      Dedup.simhashDupPairs(dupCorpus(s, dir), col("doc_id"), col("text"))),
 
     // Hash-checked twin: same banding/pigeonhole/Hamming pipeline but token
     // bits from md5, which DuckDB can recompute digest-for-digest (the
     // xxhash64 variant above stays rows-only — that kernel is Spark-internal)
-    "simhash_md5_pairs" -> ((s, dir) => {
-      val d = Tables.documents(s, dir).select(col("doc_id"), col("text"))
-      val dupped = d.union(d.select(col("doc_id") + 100000000L, col("text")))
-      Dedup.simhashMd5DupPairs(dupped, col("doc_id"), col("text"))
-    }),
+    "simhash_md5_pairs" -> ((s, dir) =>
+      Dedup.simhashMd5DupPairs(dupCorpus(s, dir), col("doc_id"), col("text"))),
 
     // ---- embedding near-dup via random-hyperplane LSH -------------------
     "embedding_neardup" -> ((s, dir) => {
@@ -1818,6 +1793,46 @@ object SparkEntry {
        |  SELECT sym.a, reach.r FROM sym JOIN reach ON sym.b = reach.id)
        |SELECT id, min(r) AS comp, (min(r) = id) AS keep FROM reach
        |GROUP BY id ORDER BY id""".stripMargin
+
+  /** Integer-micro (personalized) PageRank over the minhash dup-pair
+    * graph. `seed(col)` is the SQL seed predicate on a node column:
+    * `doc_pagerank` seeds every node (TRUE), mirroring Graph.pageRank as
+    * personalized PageRank with every node seeded; `doc_pagerank_seeded`
+    * gates the teleport term on its predicate (constant per `dst` group,
+    * so it sits outside the aggregates). BIGINT floor-div (// here, `div`
+    * in Spark) everywhere, fixed 5 iterations, weight-0 self edges keep
+    * every node in the recursion with a single recursive reference —
+    * bit-identical to the engine by construction. Every static CTE is AS
+    * MATERIALIZED: `aug` is referenced only from the recursive arm, and
+    * DuckDB inlines single-use CTEs — which re-evaluates the WHOLE
+    * all-pairs chain on every PR iteration (observed at sf1.0: OOM past
+    * 80 GB; materialized: minutes at 40 GB). */
+  private def pageRankOracle(seed: String => String): String =
+    s"""WITH RECURSIVE $MinhashAllPairsCtes,
+       |pairs AS MATERIALIZED (SELECT id_a, id_b FROM p
+       |          WHERE CAST(inter AS DOUBLE) / (na + nb - inter) >= 0.7),
+       |sym AS MATERIALIZED (SELECT DISTINCT src, dst FROM (
+       |          SELECT id_a AS src, id_b AS dst FROM pairs
+       |          UNION ALL SELECT id_b, id_a FROM pairs)),
+       |-- DISTINCT subquery, not a bare UNION: inside WITH RECURSIVE
+       |-- DuckDB 1.0 does not dedup a non-recursive CTE's UNION
+       |nodes AS MATERIALIZED (SELECT DISTINCT node FROM (
+       |           SELECT src AS node FROM sym UNION ALL SELECT dst FROM sym)),
+       |outdeg AS MATERIALIZED (SELECT src, count(*) AS d FROM sym GROUP BY src),
+       |aug AS MATERIALIZED (SELECT s.src, s.dst, o.d FROM sym s JOIN outdeg o USING (src)
+       |        UNION ALL SELECT node, node, NULL FROM nodes),
+       |pr(node, r, iter) AS (
+       |  SELECT node, CAST(CASE WHEN ${seed("node")} THEN 1000000 ELSE 0 END AS BIGINT), 0 FROM nodes
+       |  UNION ALL
+       |  SELECT a.dst,
+       |         CAST(CASE WHEN ${seed("a.dst")} THEN 150000 ELSE 0 END
+       |           + (85 * sum(CASE WHEN a.d IS NOT NULL THEN pr.r // a.d ELSE 0 END)) // 100 AS BIGINT),
+       |         pr.iter + 1
+       |  FROM pr JOIN aug a ON pr.node = a.src
+       |  WHERE pr.iter < 5
+       |  GROUP BY a.dst, pr.iter)
+       |SELECT node AS doc_id, r AS rank_micro FROM pr WHERE iter = 5
+       |ORDER BY doc_id""".stripMargin
 
   /** Shared brute-force oracle for both ANN index types (`ann_lsh_topk`,
     * `ann_ivf_topk`): exact top-10 by cosine over the planted corpus of
@@ -2248,66 +2263,8 @@ object SparkEntry {
         |FROM e GROUP BY CUBE(event_type, dow)
         |ORDER BY event_type, dow""".stripMargin,
 
-    // integer-micro PageRank: BIGINT floor-div (// here, `div` in Spark)
-    // everywhere, fixed 5 iterations, weight-0 self edges keep every node
-    // in the recursion with a single recursive reference — bit-identical
-    // to Graph.pageRank by construction
-    // every static CTE is AS MATERIALIZED: `aug` is referenced only from
-    // the recursive arm, and DuckDB inlines single-use CTEs — which
-    // re-evaluates the WHOLE all-pairs chain on every PR iteration
-    // (observed at sf1.0: OOM past 80 GB; materialized: minutes at 40 GB)
-    "doc_pagerank" ->
-      s"""WITH RECURSIVE $MinhashAllPairsCtes,
-         |pairs AS MATERIALIZED (SELECT id_a, id_b FROM p
-         |          WHERE CAST(inter AS DOUBLE) / (na + nb - inter) >= 0.7),
-         |sym AS MATERIALIZED (SELECT DISTINCT src, dst FROM (
-         |          SELECT id_a AS src, id_b AS dst FROM pairs
-         |          UNION ALL SELECT id_b, id_a FROM pairs)),
-         |-- DISTINCT subquery, not a bare UNION: inside WITH RECURSIVE
-         |-- DuckDB 1.0 does not dedup a non-recursive CTE's UNION
-         |nodes AS MATERIALIZED (SELECT DISTINCT node FROM (
-         |           SELECT src AS node FROM sym UNION ALL SELECT dst FROM sym)),
-         |outdeg AS MATERIALIZED (SELECT src, count(*) AS d FROM sym GROUP BY src),
-         |aug AS MATERIALIZED (SELECT s.src, s.dst, o.d FROM sym s JOIN outdeg o USING (src)
-         |        UNION ALL SELECT node, node, NULL FROM nodes),
-         |pr(node, r, iter) AS (
-         |  SELECT node, CAST(1000000 AS BIGINT), 0 FROM nodes
-         |  UNION ALL
-         |  SELECT a.dst,
-         |         CAST(150000 + (85 * sum(CASE WHEN a.d IS NOT NULL THEN pr.r // a.d ELSE 0 END)) // 100 AS BIGINT),
-         |         pr.iter + 1
-         |  FROM pr JOIN aug a ON pr.node = a.src
-         |  WHERE pr.iter < 5
-         |  GROUP BY a.dst, pr.iter)
-         |SELECT node AS doc_id, r AS rank_micro FROM pr WHERE iter = 5
-         |ORDER BY doc_id""".stripMargin,
-
-    // Same recursion with the teleport term gated on the seed predicate
-    // (dst < 50 is constant per group, so it sits outside the aggregates)
-    "doc_pagerank_seeded" ->
-      s"""WITH RECURSIVE $MinhashAllPairsCtes,
-         |pairs AS MATERIALIZED (SELECT id_a, id_b FROM p
-         |          WHERE CAST(inter AS DOUBLE) / (na + nb - inter) >= 0.7),
-         |sym AS MATERIALIZED (SELECT DISTINCT src, dst FROM (
-         |          SELECT id_a AS src, id_b AS dst FROM pairs
-         |          UNION ALL SELECT id_b, id_a FROM pairs)),
-         |nodes AS MATERIALIZED (SELECT DISTINCT node FROM (
-         |           SELECT src AS node FROM sym UNION ALL SELECT dst FROM sym)),
-         |outdeg AS MATERIALIZED (SELECT src, count(*) AS d FROM sym GROUP BY src),
-         |aug AS MATERIALIZED (SELECT s.src, s.dst, o.d FROM sym s JOIN outdeg o USING (src)
-         |        UNION ALL SELECT node, node, NULL FROM nodes),
-         |pr(node, r, iter) AS (
-         |  SELECT node, CAST(CASE WHEN node < 50 THEN 1000000 ELSE 0 END AS BIGINT), 0 FROM nodes
-         |  UNION ALL
-         |  SELECT a.dst,
-         |         CAST(CASE WHEN a.dst < 50 THEN 150000 ELSE 0 END
-         |           + (85 * sum(CASE WHEN a.d IS NOT NULL THEN pr.r // a.d ELSE 0 END)) // 100 AS BIGINT),
-         |         pr.iter + 1
-         |  FROM pr JOIN aug a ON pr.node = a.src
-         |  WHERE pr.iter < 5
-         |  GROUP BY a.dst, pr.iter)
-         |SELECT node AS doc_id, r AS rank_micro FROM pr WHERE iter = 5
-         |ORDER BY doc_id""".stripMargin,
+    "doc_pagerank" -> pageRankOracle(_ => "TRUE"),
+    "doc_pagerank_seeded" -> pageRankOracle(n => s"$n < 50"),
 
     "top3_orders_per_cust" ->
       """SELECT o_custkey, o_orderkey, o_totalprice, rn FROM (

@@ -180,9 +180,7 @@ object Dedup {
     withSets
       .select(col(aCol), col(bCol), col("_sha"), col("_shb"),
         size(col("_sha")).as("_na"), size(col("_shb")).as("_nb"))
-      .filter(least(col("_na"), col("_nb")).cast("double") >=
-        (col("_na") + col("_nb")).cast("double")
-          * lit(threshold / (1.0 + threshold)) - 1e-9)
+      .filter(lengthOk(col("_na"), col("_nb"), threshold))
       .select(col(aCol), col(bCol),
         size(array_intersect(col("_sha"), col("_shb"))).as("_i"),
         col("_na"), col("_nb"))
@@ -190,6 +188,28 @@ object Dedup {
         (col("_i").cast("double") / (col("_na") + col("_nb") - col("_i")))
           .as("jaccard"))
       .filter(col("jaccard") >= threshold)
+
+  /** The PPJoin length filter over set sizes `na`, `nb`: J ≥ t forces
+    * min(na,nb) ≥ t·(na+nb)/(1+t) — exact; the 1e-9 slack only ever
+    * KEEPS borderline candidates. */
+  private def lengthOk(na: Column, nb: Column, t: Double): Column =
+    least(na, nb).cast("double") >=
+      (na + nb).cast("double") * lit(t / (1.0 + t)) - 1e-9
+
+  /** The verify join: attach `_sha` (from the (doc_id, sh) frame `aSets`,
+    * keyed on `aId`) and `_shb` (from `bSets` on `bId`) to every candidate
+    * pair. `bcast` broadcasts both sides, so no shuffle carries a shingle
+    * ARRAY (the sf10 spill lesson); otherwise two keyed joins. */
+  private def withShingleSets(pairs: DataFrame, aId: String,
+                              aSets: DataFrame, bId: String,
+                              bSets: DataFrame, bcast: Boolean): DataFrame = {
+    def side(sets: DataFrame, id: String, sh: String) = {
+      val t = sets.select(col("doc_id").as(id), col("sh").as(sh))
+      if (bcast) broadcast(t) else t
+    }
+    pairs.join(side(aSets, aId, "_sha"), aId)
+      .join(side(bSets, bId, "_shb"), bId)
+  }
 
   /** MinHash+LSH near-duplicate pairs with exact Jaccard verification.
     *
@@ -261,17 +281,14 @@ object Dedup {
         posexplode(minhashBandBuckets(col("sh"), k, rowsPerBand))
           .as(Seq("band", "bucket")))
       .select(col("did"), col("band"), col("bucket"))
-    val tf = jaccardThreshold / (1.0 + jaccardThreshold)
-    val lengthFilter = (a: Column, b: Column) =>
-      least(a("nsh"), b("nsh")).cast("double") >=
-        (a("nsh") + b("nsh")).cast("double") * lit(tf) - 1e-9
     // banded stream ≈ one row per (k/rowsPerBand ≈ 16) per doc — about one
     // row per ~75 input bytes; width floors at the session default and
     // grows with the corpus (same posture as the gram-stream operators)
     val pairs = bucketPairs(banded, col("did"), maxBucket,
         pinnedParts = Some(partsHint.getOrElse(
           Sizing.explodedShuffleParts(df, bytesPerRow = 75L))),
-        pairFilter = Some(lengthFilter))
+        pairFilter = Some((a, b) =>
+          lengthOk(a("nsh"), b("nsh"), jaccardThreshold)))
       .select(col("id_a.doc_id").as("id_a"), col("id_b.doc_id").as("id_b"))
     // Verify join shape (r19 opt, the jaccardPrefixPairs sf10 lesson): a
     // sort-merge/shuffled verify carries the id_a-side shingle ARRAY on
@@ -280,20 +297,9 @@ object Dedup {
     // so broadcast it (gated by spark.graft.verifyBroadcastBytes, default
     // 2 GiB; <=0 or oversized keeps the keyed-join shape, whose spill is
     // aggregate across executors on a real cluster).
-    val withSets =
-      if (Sizing.verifyBroadcastOk(base, exact = doCut,
-          srcBytes = Sizing.leafPlanBytes(gateDf)))
-        pairs
-          .join(broadcast(base.select(col("doc_id").as("id_a"),
-            col("sh").as("_sha"))), "id_a")
-          .join(broadcast(base.select(col("doc_id").as("id_b"),
-            col("sh").as("_shb"))), "id_b")
-      else
-        pairs
-          .join(base.select(col("doc_id").as("id_a"), col("sh").as("_sha")),
-            "id_a")
-          .join(base.select(col("doc_id").as("id_b"), col("sh").as("_shb")),
-            "id_b")
+    val withSets = withShingleSets(pairs, "id_a", base, "id_b", base,
+      Sizing.verifyBroadcastOk(base, exact = doCut,
+        srcBytes = Sizing.leafPlanBytes(gateDf)))
     val verified = exactJaccardTail(withSets, "id_a", "id_b",
       jaccardThreshold)
     if (ordered) verified.orderBy("id_a", "id_b") else verified
@@ -380,10 +386,6 @@ object Dedup {
     val pairParts = math.max(parts,
       math.min(32768L,
         pairVol / Sizing.rowsPerPartition(docs.sparkSession) + 1).toInt)
-    val tf = threshold / (1.0 + threshold)
-    val lengthFilter = (a: Column, b: Column) =>
-      least(a("nsh"), b("nsh")).cast("double") >=
-        (a("nsh") + b("nsh")).cast("double") * lit(tf) - 1e-9
     // The verify must attach BOTH shingle arrays to every surviving
     // candidate. Shape matters enormously here: a sort-merge join carries
     // the id_a-side ARRAY on every pair row through the id_b exchange, so
@@ -408,22 +410,12 @@ object Dedup {
     def verified(bkts: DataFrame, w: Int): DataFrame = {
       val pairs = bucketPairs(bkts, col("did"), maxBucket,
           pinnedParts = Some(w),
-          pairFilter = Some(lengthFilter))
+          pairFilter = Some((a, b) =>
+            lengthOk(a("nsh"), b("nsh"), threshold)))
         .select(col("id_a.doc_id").as("id_a"), col("id_b.doc_id").as("id_b"))
-      val withSets =
-        if (useBcast)
-          pairs
-            .join(broadcast(s.select(col("doc_id").as("id_a"),
-              col("sh").as("_sha"))), "id_a")
-            .join(broadcast(s.select(col("doc_id").as("id_b"),
-              col("sh").as("_shb"))), "id_b")
-        else
-          pairs
-            .repartition(w, col("id_a"))
-            .join(s.select(col("doc_id").as("id_a"), col("sh").as("_sha")),
-              "id_a")
-            .join(s.select(col("doc_id").as("id_b"), col("sh").as("_shb")),
-              "id_b")
+      val withSets = withShingleSets(
+        if (useBcast) pairs else pairs.repartition(w, col("id_a")),
+        "id_a", s, "id_b", s, useBcast)
       exactJaccardTail(withSets, "id_a", "id_b", threshold)
     }
     // ---- disk-budget staging (r19: the first FULL sf10 pass found it) --
@@ -572,32 +564,23 @@ object Dedup {
         posexplode(minhashBandBuckets(col("sh"), k, rowsPerBand))
           .as(Seq("band", "bucket")))
       .select(col("sid"), col("band"), col("bucket"))
-    val tf = jaccardThreshold / (1.0 + jaccardThreshold)
-    val lengthFilter = (a: Column, b: Column) =>
-      least(a("nsh"), b("nsh")).cast("double") >=
-        (a("nsh") + b("nsh")).cast("double") * lit(tf) - 1e-9
     val pairs = bucketPairs(banded, col("sid"), maxBucket,
         pinnedParts = Some(
           Sizing.explodedShuffleParts(existing, bytesPerRow = 75L)
             .max(Sizing.explodedShuffleParts(incoming, bytesPerRow = 75L))),
-        pairFilter = Some(lengthFilter))
+        pairFilter = Some((a, b) =>
+          lengthOk(a("nsh"), b("nsh"), jaccardThreshold)))
       .filter(col("id_a.side") === 0 && col("id_b.side") === 1)
       .select(col("id_a.doc_id").as("existing_id"),
         col("id_b.doc_id").as("incoming_id"))
-    val exA = base.filter(col("side") === 0)
-      .select(col("doc_id").as("existing_id"), col("sh").as("_sha"))
-    val inB = base.filter(col("side") === 1)
-      .select(col("doc_id").as("incoming_id"), col("sh").as("_shb"))
     // broadcast-gated verify — no shuffle may carry a shingle array
     // (minhashDupPairs' sf10 rationale; same conf gate)
-    val withSets =
-      if (Sizing.verifyBroadcastOk(base, exact = doCut,
-          srcBytes = Sizing.leafPlanBytes(existing) +
-            Sizing.leafPlanBytes(incoming)))
-        pairs.join(broadcast(exA), "existing_id")
-          .join(broadcast(inB), "incoming_id")
-      else
-        pairs.join(exA, "existing_id").join(inB, "incoming_id")
+    val withSets = withShingleSets(pairs,
+      "existing_id", base.filter(col("side") === 0),
+      "incoming_id", base.filter(col("side") === 1),
+      Sizing.verifyBroadcastOk(base, exact = doCut,
+        srcBytes = Sizing.leafPlanBytes(existing) +
+          Sizing.leafPlanBytes(incoming)))
     exactJaccardTail(withSets, "existing_id", "incoming_id",
         jaccardThreshold)
       .orderBy("existing_id", "incoming_id")

@@ -28,13 +28,8 @@ object Graph {
   def connectedComponents(edges: DataFrame, src: Column, dst: Column,
                           maxIter: Int = 25): DataFrame = {
     require(maxIter > 0, s"maxIter must be positive, got $maxIter")
-    // cut the caller's lineage ONCE before symmetrization: both union
-    // branches reference the edge list, and similarity-pair inputs carry
-    // an expensive pipeline (minhash etc.) that would otherwise run twice
-    // inside the first materialization job
-    val base = Checkpoints.cut(edges
-      .select(src.cast("long").as("a"), dst.cast("long").as("b")))
-    val (labels, converged) = labelPropagation(base, maxIter)
+    val (labels, converged) = labelPropagation(cutEdges(edges, src, dst),
+      maxIter)
     // a partial label set is a WRONG answer (one real cluster reported as
     // several, duplicate keepers downstream) — fail loudly, never return it
     require(converged,
@@ -45,10 +40,37 @@ object Graph {
     labels
   }
 
-  /** Min-label propagation over a pre-normalized, lineage-cut (a, b) edge
-    * list: (labels, reached-fixpoint). Labels are PARTIAL when the flag is
-    * false — callers must either throw ([[connectedComponents]]) or
-    * discard and re-route ([[dedupClusters]]'s star fallback). */
+  /** The (a: long, b: long) edge list of the component routes, cut ONCE:
+    * both symmetrization branches (and the star fallback) read it, and
+    * similarity-pair inputs carry an expensive pipeline (minhash etc.). */
+  private def cutEdges(edges: DataFrame, src: Column, dst: Column)
+      : DataFrame =
+    Checkpoints.cut(edges
+      .select(src.cast("long").as("a"), dst.cast("long").as("b")))
+
+  /** Iterate `step` from `init` until a round leaves the scalar signature
+    * `sig` unchanged, or for `maxIter` rounds: (frame, rounds, reached-
+    * fixpoint). Every round is cut: the next round and the signature both
+    * read it, so an uncut lineage doubles per round — exponential plan
+    * size by round ~20. The signature is one scalar aggregate per round. */
+  private def fixpoint[S](init: DataFrame, maxIter: Int)(
+      step: DataFrame => DataFrame)(sig: DataFrame => S)
+      : (DataFrame, Int, Boolean) = {
+    @annotation.tailrec
+    def go(cur: DataFrame, prev: S, rounds: Int): (DataFrame, Int, Boolean) =
+      if (rounds == maxIter) (cur, rounds, false)
+      else {
+        val next = Checkpoints.cut(step(cur))
+        val s = sig(next)
+        if (s == prev) (next, rounds + 1, true) else go(next, s, rounds + 1)
+      }
+    go(init, sig(init), 0)
+  }
+
+  /** Min-label propagation over a [[cutEdges]] edge list: (labels,
+    * reached-fixpoint). Labels are PARTIAL when the flag is false —
+    * callers must either throw ([[connectedComponents]]) or discard and
+    * re-route ([[dedupClusters]]'s star fallback). */
   private def labelPropagation(base: DataFrame, maxIter: Int)
       : (DataFrame, Boolean) = {
     // closed neighborhood via explicit self-loops: each round is then ONE
@@ -56,11 +78,7 @@ object Graph {
     // node's own label back in)
     val undirected = base
       .union(base.select(col("b").as("a"), col("a").as("b")))
-    // localCheckpoint (eager), NOT persist: each round's plan references the
-    // previous round's labels, so an uncut lineage grows per round —
-    // exponential plan size by round ~20. Checkpointing truncates the plan
-    // to the materialized result, keeping every round's plan constant-size.
-    var labels = Checkpoints.cut(undirected.select(col("a").as("id"))
+    val labels = Checkpoints.cut(undirected.select(col("a").as("id"))
       .distinct().withColumn("comp", col("id")))
     // ONE distinct (r19 opt): the old shape dedup'd the full 4|E|-row
     // symmetrized+self-loop stream AND ran a second distinct for the label
@@ -74,27 +92,18 @@ object Graph {
       .persist()
     // labels only ever decrease, so an unchanged exact SUM of labels ⇔ no
     // label changed — one scalar aggregate per round instead of a compare
-    // join (decimal: a long sum overflows at ~1e6 nodes with 1e15 ids)
-    def labelSum(l: org.apache.spark.sql.DataFrame): java.math.BigDecimal =
-      l.agg(coalesce(sum(col("comp").cast("decimal(38,0)")),
-        lit(0).cast("decimal(38,0)"))).collect()(0)
-        .getDecimal(0)
-    var prevSum = labelSum(labels)
-    var iter = 0
-    var converged = false
-    while (iter < maxIter && !converged) {
-      val next = Checkpoints.cut(sym
-        .join(labels, sym("b") === labels("id"))
+    // join (decimal: a long sum overflows at ~1e6 nodes with 1e15 ids;
+    // Scala BigDecimal, so `==` compares values)
+    def labelSum(l: DataFrame): BigDecimal =
+      BigDecimal(l.agg(coalesce(sum(col("comp").cast("decimal(38,0)")),
+        lit(0).cast("decimal(38,0)"))).collect()(0).getDecimal(0))
+    val (out, _, converged) = fixpoint(labels, maxIter) { l =>
+      sym.join(l, sym("b") === l("id"))
         .groupBy(sym("a").as("id"))
-        .agg(min(col("comp")).as("comp")))
-      val nextSum = labelSum(next)
-      converged = nextSum.compareTo(prevSum) == 0
-      prevSum = nextSum
-      labels = next
-      iter += 1
-    }
+        .agg(min(col("comp")).as("comp"))
+    }(labelSum)
     sym.unpersist(blocking = false)
-    (labels, converged)
+    (out, converged)
   }
 
   /** Dedup keep/drop list from similarity pairs: every node labeled with
@@ -114,8 +123,9 @@ object Graph {
     * [[connectedComponentsStar]] (O(log² n) rounds on ANY diameter). The
     * adversarial case pays `lpBudget` cheap extra rounds (~20% of its
     * star cost); the common case never pays the 2× star premium. Both
-    * routes share one lineage-cut edge materialization, so the expensive
-    * upstream (minhash etc.) runs once regardless of route. */
+    * routes share one lineage-cut edge materialization ([[cutEdges]]),
+    * so the expensive upstream (minhash etc.) runs once, and the edge
+    * list is cut once, regardless of route. */
   def dedupClusters(pairs: DataFrame, idA: Column, idB: Column): DataFrame =
     dedupClustersRouted(pairs, idA, idB)._1
 
@@ -124,15 +134,16 @@ object Graph {
   private[graft] def dedupClustersRouted(pairs: DataFrame, idA: Column,
       idB: Column, lpBudget: Int = 8): (DataFrame, String) = {
     require(lpBudget > 0, s"lpBudget must be positive, got $lpBudget")
-    val base = Checkpoints.cut(pairs
-      .select(idA.cast("long").as("a"), idB.cast("long").as("b")))
+    val base = cutEdges(pairs, idA, idB)
     val (lp, converged) = labelPropagation(base, lpBudget)
     val (labels, route) =
       if (converged) (lp, "lp")
-      else (connectedComponentsStar(base, col("a"), col("b")), "star")
+      else (starBody(base, starMaxIter)._1, "star") // base is already cut
     (labels.select(col("id"), col("comp"),
       (col("id") === col("comp")).as("keep")), route)
   }
+
+  private val starMaxIter = 50 // connectedComponentsStar's default budget
 
   /** Connected components by alternating large-star/small-star contraction
     * (Kiveris et al., "Connected Components in MapReduce and Beyond",
@@ -155,7 +166,7 @@ object Graph {
     * aggregate, O(1) driver rows. Each round's result is checkpointed
     * ([[Checkpoints.cut]]) so plans stay constant-size. */
   def connectedComponentsStar(edges: DataFrame, src: Column, dst: Column,
-                              maxIter: Int = 50): DataFrame =
+                              maxIter: Int = starMaxIter): DataFrame =
     starContraction(edges, src, dst, maxIter)._1
 
   /** [[connectedComponentsStar]] plus the converged round count — the
@@ -164,13 +175,16 @@ object Graph {
                                      dst: Column, maxIter: Int)
       : (DataFrame, Int) = {
     require(maxIter > 0, s"maxIter must be positive, got $maxIter")
-    val base = Checkpoints.cut(edges
-      .select(src.cast("long").as("a"), dst.cast("long").as("b")))
+    starBody(cutEdges(edges, src, dst), maxIter)
+  }
+
+  /** Star contraction over a [[cutEdges]] edge list: (labels, rounds). */
+  private def starBody(base: DataFrame, maxIter: Int): (DataFrame, Int) = {
     val nodes = base.select(explode(array(col("a"), col("b"))).as("id"))
       .distinct()
     // canonical orientation child > parent; self-loops carry no
     // connectivity (their nodes re-enter via the final left join)
-    var e = Checkpoints.cut(base.filter(col("a") =!= col("b"))
+    val canon = Checkpoints.cut(base.filter(col("a") =!= col("b"))
       .select(greatest(col("a"), col("b")).as("a"),
         least(col("a"), col("b")).as("b"))
       .distinct())
@@ -208,24 +222,15 @@ object Graph {
     // aggregate per round, same O(1)-driver-rows posture as the label
     // twin's sum check (hash SUM in decimal, not xor: xor of an even
     // number of identical values degenerates)
-    def checksum(ed: DataFrame): (Long, java.math.BigDecimal) = {
+    def checksum(ed: DataFrame): (Long, BigDecimal) = {
       val r = ed.agg(count(lit(1)),
         coalesce(sum(xxhash64(col("a"), col("b")).cast("decimal(38,0)")),
           lit(0).cast("decimal(38,0)"))).collect()(0)
-      (r.getLong(0), r.getDecimal(1))
+      (r.getLong(0), BigDecimal(r.getDecimal(1)))
     }
 
-    var prev = checksum(e)
-    var iter = 0
-    var converged = false
-    while (iter < maxIter && !converged) {
-      val next = Checkpoints.cut(smallStar(largeStar(e)))
-      val cur = checksum(next)
-      converged = cur._1 == prev._1 && cur._2.compareTo(prev._2) == 0
-      prev = cur
-      e = next
-      iter += 1
-    }
+    val (e, rounds, converged) =
+      fixpoint(canon, maxIter)(ed => smallStar(largeStar(ed)))(checksum)
     require(converged,
       s"connectedComponentsStar did not converge in $maxIter rounds — " +
         "this should not happen (star contraction is O(log² n) on any " +
@@ -236,7 +241,7 @@ object Graph {
     val labels = nodes
       .join(e.select(col("a").as("id"), col("b").as("comp")), Seq("id"), "left")
       .select(col("id"), coalesce(col("comp"), col("id")).as("comp"))
-    (labels, iter)
+    (labels, rounds)
   }
 
   /** PageRank over a directed edge list, in EXACT integer micro-units —
@@ -251,91 +256,18 @@ object Graph {
     * mass (nodes with no outbound edge) and flooring remainders are
     * dropped, not redistributed — a documented, deterministic variant.
     *
-    * Scale shape: each iteration is one equi-join of the rank table
-    * against the (cached) augmented edge list plus one partial-aggregated
-    * groupBy — linear shuffles on the edge count, no driver-side graph
-    * state. Self-loops with weight 0 keep inbound-less nodes in the
-    * iteration without a second recursive reference (the same trick lets
-    * the DuckDB recursive-CTE oracle express it with one `pr` reference).
+    * This is [[personalizedPageRank]] with every node seeded (teleport
+    * base 150000 and r₀ = 1e6 everywhere), run without the seed join.
     *
-    * Lineage: unlike [[connectedComponents]] (whose convergence check
-    * reads each round's labels TWICE, doubling the plan per round), each
-    * PageRank round references the previous ranks exactly once — the plan
-    * grows linearly, so iterations stay LAZY and fuse into one job.
-    * An eager localCheckpoint every `checkpointInterval` rounds bounds
-    * plan depth for long runs without paying one materialization job per
-    * round. */
-  /** `edgesDistinct = true` — caller guarantees the edge list is already a
+    * `edgesDistinct = true` — caller guarantees the edge list is already a
     * set (e.g. ordered similarity pairs plus their disjoint reversals):
     * skips the full-edge-list dedup shuffle. Semantics are unchanged only
     * under that guarantee (PageRank is defined over the edge SET). */
   def pageRank(edges: DataFrame, src: Column, dst: Column,
                iterations: Int = 5, checkpointInterval: Int = 10,
-               edgesDistinct: Boolean = false): DataFrame = {
-    require(iterations > 0, s"iterations must be positive, got $iterations")
-    require(checkpointInterval > 0,
-      s"checkpointInterval must be positive, got $checkpointInterval")
-    val e0 = edges
-      .select(src.cast("long").as("src"), dst.cast("long").as("dst"))
-    // re-key on src BEFORE caching (r20): the incoming edge list inherits
-    // its producer's width (e.g. a pair generator's pinned expansion
-    // stages — 64 partitions of ~200 rows each at bench scale), and every
-    // aug-build stage below re-reads the cache at that width; measured at
-    // local[32], three 64-128-task cache/broadcast-build stages over a
-    // 12k-row edge list were ~¾ of doc_pagerank's wall. One hash exchange
-    // keyed the way every consumer wants it (outdeg groupBy, aug join)
-    // lets AQE size the cached width from bytes, not the producer's task
-    // count — scale-adaptive in both directions.
-    val e = (if (edgesDistinct) e0 else e0.distinct())
-      .repartition(col("src")).persist()
-    // materialize BEFORE fan-out: aug references e several times (join
-    // side, outdegree, node self-loops); without an eager fill those
-    // sibling scans race the cold cache and each recompute e's upstream
-    // (e.g. a 10 s minhash pipeline) instead of hitting it
-    e.count()
-    val nodes = e.select(col("src").as("node"))
-      .union(e.select(col("dst"))).distinct()
-    val outdeg = e.groupBy("src").agg(count(lit(1)).as("d"))
-    // augmented edges: real edges carry the source's outdegree; every node
-    // additionally gets a weight-0 self edge so nodes without inbound
-    // edges still receive their base rank each round
-    // pre-partitioned on src BEFORE caching: the per-iteration join key is
-    // src = node, and each iteration's rank table arrives hash-partitioned
-    // on node from the previous groupBy — so a co-partitioned cached edge
-    // list makes every join exchange-free on both sides (only the groupBy
-    // shuffle remains per round)
-    val aug = e.join(outdeg, "src")
-      .select(col("src"), col("dst"), col("d"))
-      .union(nodes.select(col("node"), col("node"),
-        lit(null).cast("long")))
-      .repartition(col("src"))
-      .persist()
-    aug.count() // materialize once; every iteration re-reads it
-    // initial ranks from aug's OWN self-loop rows (r19 opt): the cached
-    // augmented table already carries one (node, node, null) row per node,
-    // so r₀ needs no second node-set distinct and no extra checkpoint job —
-    // its lineage is one filter over the materialized cache, and it arrives
-    // already hash-partitioned on the join key (the repartition above), so
-    // round 1's join is exchange-free on both sides like every later round
-    var ranks = aug.filter(col("d").isNull)
-      .select(col("src").as("node"), lit(1000000L).as("r"))
-    for (i <- 1 to iterations) {
-      ranks = aug.join(ranks, aug("src") === ranks("node"))
-        .select(aug("dst").as("to"),
-          when(col("d").isNotNull, expr("r div d"))
-            .otherwise(lit(0L)).as("c"))
-        .groupBy(col("to").as("node"))
-        .agg(expr("CAST(150000 + (85 * sum(c)) div 100 AS BIGINT)").as("r"))
-      if (i % checkpointInterval == 0 && i < iterations)
-        ranks = Checkpoints.cut(ranks)
-    }
-    // materialize BEFORE unpersisting: the loop is lazy, so dropping the
-    // cached edge list first would force every iteration to rebuild it
-    val out = Checkpoints.cut(ranks)
-    e.unpersist(blocking = false)
-    aug.unpersist(blocking = false)
-    out
-  }
+               edgesDistinct: Boolean = false): DataFrame =
+    rank(edges, src, dst, None, iterations, checkpointInterval,
+      edgesDistinct)
 
   /** Personalized PageRank in the same EXACT integer micro-units as
     * [[pageRank]], with teleport restricted to a SEED set — the
@@ -349,47 +281,96 @@ object Graph {
     * [[pageRank]]):
     *   r'(n) = (n ∈ S ? 150000 : 0) + (85 · Σ_{(s→n)} (r(s) div deg(s))) div 100
     * from r₀ = 1_000_000 on seeds, 0 elsewhere. Seed ids not present in
-    * the edge list are ignored (the graph defines the node set).
-    *
-    * Plan shape is [[pageRank]]'s: co-partitioned cached augmented
-    * edges, one equi-join + one partial-aggregated groupBy per round,
-    * lazy rounds fused into one job. The seed base rides the weight-0
-    * self-loop rows (one per node), so no per-round broadcast join is
-    * added — `sum(base)` inside the existing aggregate recovers it. */
+    * the edge list are ignored (the graph defines the node set). */
   def personalizedPageRank(edges: DataFrame, src: Column, dst: Column,
                            seeds: DataFrame, seed: Column,
                            iterations: Int = 5,
                            checkpointInterval: Int = 10,
-                           edgesDistinct: Boolean = false): DataFrame = {
+                           edgesDistinct: Boolean = false): DataFrame =
+    rank(edges, src, dst,
+      Some(seeds.select(seed.cast("long").as("node")).distinct()),
+      iterations, checkpointInterval, edgesDistinct)
+
+  /** The one (personalized) PageRank body: `seeds` = the distinct seed
+    * `node` ids, or None for every node seeded (no seed join at all).
+    *
+    * Scale shape: each iteration is one equi-join of the rank table
+    * against the (cached) augmented edge list plus one partial-aggregated
+    * groupBy — linear shuffles on the edge count, no driver-side graph
+    * state. Self-loops with weight 0 keep inbound-less nodes in the
+    * iteration without a second recursive reference (the same trick lets
+    * the DuckDB recursive-CTE oracle express it with one `pr` reference),
+    * and they carry each node's teleport `base`, so `sum(base)` inside
+    * the existing aggregate recovers it — no per-round broadcast join.
+    *
+    * Lineage: unlike the component routes (whose convergence check reads
+    * each round TWICE, doubling the plan per round), each round
+    * references the previous ranks exactly once — the plan grows
+    * linearly, so iterations stay LAZY and fuse into one job. An eager
+    * cut every `checkpointInterval` rounds bounds plan depth for long
+    * runs without paying one materialization job per round. */
+  private def rank(edges: DataFrame, src: Column, dst: Column,
+                   seeds: Option[DataFrame], iterations: Int,
+                   checkpointInterval: Int,
+                   edgesDistinct: Boolean): DataFrame = {
     require(iterations > 0, s"iterations must be positive, got $iterations")
     require(checkpointInterval > 0,
       s"checkpointInterval must be positive, got $checkpointInterval")
     val e0 = edges
       .select(src.cast("long").as("src"), dst.cast("long").as("dst"))
-    // re-key on src before caching — same rationale as pageRank (r20)
+    // re-key on src BEFORE caching (r20): the incoming edge list inherits
+    // its producer's width (e.g. a pair generator's pinned expansion
+    // stages — 64 partitions of ~200 rows each at bench scale), and every
+    // aug-build stage below re-reads the cache at that width; measured at
+    // local[32], three 64-128-task cache/broadcast-build stages over a
+    // 12k-row edge list were ~¾ of doc_pagerank's wall. One hash exchange
+    // keyed the way every consumer wants it (outdeg groupBy, aug join)
+    // lets AQE size the cached width from bytes — but AQE only COALESCES:
+    // the width can shrink below `spark.sql.shuffle.partitions`, never
+    // grow past it, so a large edge list is cached at most that wide.
     val e = (if (edgesDistinct) e0 else e0.distinct())
       .repartition(col("src")).persist()
+    // materialize BEFORE fan-out: aug references e several times (join
+    // side, outdegree, node self-loops); without an eager fill those
+    // sibling scans race the cold cache and each recompute e's upstream
+    // (e.g. a 10 s minhash pipeline) instead of hitting it
     e.count()
-    val sd = seeds.select(seed.cast("long").as("node")).distinct()
     val nodes = e.select(col("src").as("node"))
       .union(e.select(col("dst"))).distinct()
-    // seed flag resolved ONCE against the node set (seeds are small —
-    // broadcast); it then rides the cached self-loop rows below
-    val flagged = nodes
-      .join(broadcast(sd.withColumn("_s", lit(1L))), Seq("node"), "left")
-      .select(col("node"), coalesce(col("_s"), lit(0L)).as("is_seed"))
+    // teleport base per node: 150000 everywhere, or only on seeds — the
+    // seed flag is resolved ONCE against the node set (seeds are small —
+    // broadcast), then rides the cached self-loop rows below
+    val (selfNodes, base) = seeds match {
+      case None => (nodes, lit(150000L))
+      case Some(sd) =>
+        (nodes
+          .join(broadcast(sd.withColumn("_s", lit(1L))), Seq("node"), "left")
+          .select(col("node"), coalesce(col("_s"), lit(0L)).as("is_seed")),
+          col("is_seed") * 150000L)
+    }
     val outdeg = e.groupBy("src").agg(count(lit(1)).as("d"))
+    // augmented edges: real edges carry the source's outdegree; every node
+    // additionally gets a weight-0 self edge so nodes without inbound
+    // edges still receive their base rank each round
+    // pre-partitioned on src BEFORE caching: the per-iteration join key is
+    // src = node, and each iteration's rank table arrives hash-partitioned
+    // on node from the previous groupBy — so a co-partitioned cached edge
+    // list makes every join exchange-free on both sides (only the groupBy
+    // shuffle remains per round)
     val aug = e.join(outdeg, "src")
       .select(col("src"), col("dst"), col("d"), lit(0L).as("base"))
-      .union(flagged.select(col("node"), col("node"),
-        lit(null).cast("long"), (col("is_seed") * 150000L).as("base")))
+      .union(selfNodes.select(col("node"), col("node"),
+        lit(null).cast("long"), base.as("base")))
       .repartition(col("src"))
       .persist()
-    aug.count()
-    // initial ranks from aug's self-loop rows (see pageRank): the seed flag
-    // rides the cached `base` column, so r₀ = 1e6 exactly on seeds — no
-    // second node-set pass, no extra checkpoint job, co-partitioned with
-    // the round-1 join
+    aug.count() // materialize once; every iteration re-reads it
+    // initial ranks from aug's OWN self-loop rows (r19 opt): the cached
+    // augmented table already carries one (node, node, null, base) row per
+    // node, so r₀ (1e6 where base > 0) needs no second node-set distinct
+    // and no extra checkpoint job — its lineage is one filter over the
+    // materialized cache, and it arrives already hash-partitioned on the
+    // join key (the repartition above), so round 1's join is exchange-free
+    // on both sides like every later round
     var ranks = aug.filter(col("d").isNull)
       .select(col("src").as("node"),
         when(col("base") > 0, lit(1000000L)).otherwise(lit(0L)).as("r"))
@@ -405,6 +386,8 @@ object Graph {
       if (i % checkpointInterval == 0 && i < iterations)
         ranks = Checkpoints.cut(ranks)
     }
+    // materialize BEFORE unpersisting: the loop is lazy, so dropping the
+    // cached edge list first would force every iteration to rebuild it
     val out = Checkpoints.cut(ranks)
     e.unpersist(blocking = false)
     aug.unpersist(blocking = false)

@@ -110,6 +110,38 @@ class GraphSpec extends SparkSpec {
     assert(out == Map(1L -> 1217281L, 2L -> 1054187L, 3L -> 728531L))
   }
 
+  test("property: pageRank equals personalizedPageRank with every node " +
+    "seeded, row for row (self-loops, duplicates, hub, chain, empty)") {
+    import org.scalacheck.{Gen, Prop}
+    def ranks(df: org.apache.spark.sql.DataFrame) =
+      df.collect().map(r => (r.getLong(0), r.getLong(1))).sorted.toSeq
+    def agree(pairs: Seq[(Long, Long)], edgesDistinct: Boolean): Boolean = {
+      val e = edges(pairs)
+      val all = e.select(col("a").as("n")).union(e.select(col("b")))
+      val pr = ranks(Graph.pageRank(e, col("a"), col("b"), iterations = 4,
+        edgesDistinct = edgesDistinct))
+      val ppr = ranks(Graph.personalizedPageRank(e, col("a"), col("b"),
+        all, col("n"), iterations = 4, edgesDistinct = edgesDistinct))
+      pr.map(_._1).distinct.size == pr.size && pr == ppr
+    }
+    // named shapes, each in both edge-list modes where the list is a set
+    val hub = (1L to 12L).map(i => (0L, i)) ++ (1L to 12L).map(i => (i, 0L))
+    val chain = (0L until 30L).map(i => (i, i + 1))
+    assert(agree(Seq((1L, 1L), (1L, 2L), (2L, 2L), (3L, 3L)), false))
+    assert(agree(Seq((1L, 2L), (1L, 2L), (2L, 1L), (2L, 3L), (2L, 3L)),
+      edgesDistinct = false))
+    Seq(hub, chain, Seq.empty[(Long, Long)]).foreach { g =>
+      assert(agree(g, edgesDistinct = true) && agree(g, edgesDistinct = false),
+        s"divergence on $g")
+    }
+    // random directed graphs: ids ≤ 15 make self-loops and duplicate
+    // edges common, so edgesDistinct = false is the valid mode
+    val pairGen = Gen.zip(Gen.choose(0L, 15L), Gen.choose(0L, 15L))
+    val graphGen = Gen.choose(0, 25).flatMap(n => Gen.listOfN(n, pairGen))
+    checkProp(Prop.forAll(graphGen)(agree(_, edgesDistinct = false)),
+      minTests = 6)
+  }
+
   test("triangleCounts: K4 plus a pendant edge — hand-counted") {
     // K4 on {1,2,3,4}: 4 triangles, every node in exactly 3; the pendant
     // edge (10,11) contributes zero but both nodes must still be emitted

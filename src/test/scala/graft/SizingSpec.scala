@@ -9,9 +9,26 @@ import scala.util.Using
 import graft.plans.Sizing
 
 /** The plan-sizing module's own contracts: the spill budget is a pure
-  * function of usable bytes, and the runtime `spark.graft.*` knob surface
-  * stays inside [[Sizing]] (plus the checkpoint-dir switch). */
+  * function of usable bytes, the runtime `spark.graft.*` knob surface
+  * stays inside [[Sizing]] (plus the checkpoint-dir switch), and every
+  * lineage cut goes through [[graft.ops.Checkpoints.cut]]. */
 class SizingSpec extends SparkSpec {
+
+  /** (file relative to src/main/scala, line number, trimmed line) for
+    * every line of a main source that `hit` accepts. */
+  private def scanMain(hit: String => Boolean): List[(String, Int, String)] = {
+    val root = new File("src/main/scala")
+    assert(root.isDirectory, s"sources not found under ${root.getAbsolutePath}")
+    Using.resource(Files.walk(root.toPath)) { paths =>
+      paths.iterator().asScala
+        .filter(_.toString.endsWith(".scala"))
+        .flatMap { p =>
+          Files.readAllLines(p).asScala.zipWithIndex
+            .collect { case (line, i) if hit(line) =>
+              (root.toPath.relativize(p).toString, i + 1, line.trim) }
+        }.toList
+    }
+  }
 
   test("pair spill budget is a third of usable space with no floor: a " +
     "3 GiB tmpfs plans 1 GiB, not more than the disk holds") {
@@ -30,18 +47,8 @@ class SizingSpec extends SparkSpec {
 
   test("every spark.graft.* key in src/main is read in Sizing.scala or " +
     "is Checkpoints.DirConf") {
-    val root = new File("src/main/scala")
-    assert(root.isDirectory, s"sources not found under ${root.getAbsolutePath}")
     val literal = "\"spark.graft."
-    val hits = Using.resource(Files.walk(root.toPath)) { paths =>
-      paths.iterator().asScala
-        .filter(_.toString.endsWith(".scala"))
-        .flatMap { p =>
-          Files.readAllLines(p).asScala.zipWithIndex
-            .collect { case (line, i) if line.contains(literal) =>
-              (root.toPath.relativize(p).toString, i + 1, line.trim) }
-        }.toList
-    }
+    val hits = scanMain(_.contains(literal))
     val stray = hits.filterNot { case (file, _, line) =>
       file == "graft/plans/Sizing.scala" ||
         (file == "graft/ops/Checkpoints.scala" &&
@@ -51,5 +58,22 @@ class SizingSpec extends SparkSpec {
       stray.map { case (f, n, l) => s"$f:$n: $l" }.mkString("\n", "\n", ""))
     // the scan is live: it does see Sizing's own keys
     assert(hits.exists(_._1 == "graft/plans/Sizing.scala"))
+  }
+
+  test("every lineage cut in src/main goes through Checkpoints.cut, so " +
+    "spark.graft.checkpoint.dir reaches it") {
+    // a direct localCheckpoint()/checkpoint() would stay local (or
+    // unconfigured) when the key asks for reliable cuts
+    val comment = Seq("//", "*", "/*")
+    val hits = scanMain { line =>
+      val t = line.trim
+      !comment.exists(t.startsWith) &&
+        (t.contains("localCheckpoint(") || t.contains(".checkpoint("))
+    }
+    val stray = hits.filterNot(_._1 == "graft/ops/Checkpoints.scala")
+    assert(stray.isEmpty, "lineage cuts bypassing Checkpoints.cut: " +
+      stray.map { case (f, n, l) => s"$f:$n: $l" }.mkString("\n", "\n", ""))
+    // the scan is live: it does see Checkpoints' own two calls
+    assert(hits.count(_._1 == "graft/ops/Checkpoints.scala") == 2)
   }
 }
